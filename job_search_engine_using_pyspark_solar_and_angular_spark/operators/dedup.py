@@ -218,7 +218,7 @@ def minhash_lsh_candidates(
     # RUNTIME via AQE's exchange reuse (the static plan shows two Exchange
     # subtrees, no ReusedExchange node) — disabling AQE/exchange reuse
     # silently doubles the pipeline cost. Pinned by
-    # tests/test_dedup.py::test_lsh_self_join_reuses_exchange_at_runtime.
+    # tests/test_operators.py::test_lsh_self_join_reuses_exchange_at_runtime.
     banded = minhash_bucket_table(
         df, id_col, text_col, shingle_n, num_perm, bands,
         shingle_hashes=shingle_hashes,

@@ -1,11 +1,17 @@
 """Query-surface functions mirroring the reference's three REST endpoints
 (``Ranking Model/src/main/java/api/Handler.java:33-161`` and
-``Main/SolrRanker.java:66-160``), re-expressed as single Catalyst plans.
+``Main/SolrRanker.java:66-160``), re-expressed as Catalyst plans.
 
-The reference's N+1 per-row Solr lookups (``SolrRanker.java:80-84,107-110``)
-become one broadcast hash join; the ``{count, data:[{tweet,user}]}`` envelope
-(``api/Handler.java:42-64``) is built by ``to_envelope`` from the collected
-top-k only (k rows cross the driver boundary, never the corpus).
+Keyword search runs the way Solr answers it (``SolrRanker.java:66-84``):
+score, then fetch. Phase 1 ranks with BM25 over the query terms' posting
+lists and collects the <= start+k (doc_id, score) hits; phase 2 fetches
+those documents by id with a literal ``isin`` filter the parquet scan can
+push down. The reference's N+1 per-row Solr lookups
+(``SolrRanker.java:80-84,107-110``) become one broadcast join to the user
+dimension; the ``{count, data:[{tweet,user}]}`` envelope
+(``api/Handler.java:42-64``) is built from the collected top-k only (k rows
+cross the driver boundary, never the corpus). The other routes stay single
+plans.
 """
 
 from __future__ import annotations
@@ -31,42 +37,59 @@ def search_keyword(
     start: int = 0,
     after: tuple[float, int] | None = None,
 ) -> DataFrame:
-    """BM25 top-k for a free-text query, joined back to full docs (and
+    """BM25 top-k for a free-text query with the full doc rows (and
     optionally the user dimension — reference J1 broadcast join). The query
     passes through the SAME analyzer as the corpus (tokenize_query mirrors
     tokenize_normalized) — otherwise punctuated queries would never match.
 
+    Score, then fetch — Solr's query phase followed by its stored-field
+    fetch (``SolrRanker.java:66-84``):
+
+    1. **Score.** :func:`bm25_search` ranks over the query terms' posting
+       lists and the <= ``start+k`` (doc_id, score) hits are collected.
+    2. **Fetch.** The docs are read with ``doc_id.isin(ids)``, a literal
+       filter the parquet scan can push down, instead of joining the hits
+       against a full docs scan. Each row gets its collected score, the
+       user dimension is broadcast-joined as before, and the <= k rows are
+       ordered inside one partition (no range-partition sort, so no
+       sampling job).
+
+    Columns: doc_id, score, the other doc columns, then the user columns.
+
     Pagination (reference O5 — the skip/limit the reference controller
     accepted but ignored, ``api/Handler.java:34``): ``start`` is Solr-style
     numeric offset (the retrieval pool deepens to ``start+k`` and the page
-    is sliced via :func:`operators.topk.paginate`); ``after=(score,
-    doc_id)`` is the KEYSET cursor — constant per-page cost, preferred for
-    deep paging. The join-back and ordering are identical either way.
-    ``start`` and ``after`` are mutually exclusive: they define different
-    page boundaries, and silently preferring one (the pre-r9 behavior
-    ignored ``start``) hides a caller bug — reject the combination."""
+    is sliced from the collected hits); ``after=(score, doc_id)`` is the
+    KEYSET cursor — constant per-page cost, preferred for deep paging. The
+    fetch and ordering are identical either way. ``start`` and ``after``
+    are mutually exclusive: they define different page boundaries, and
+    silently preferring one (the pre-r9 behavior ignored ``start``) hides
+    a caller bug — reject the combination."""
     terms = tokenize_query(query)
     if after is not None and start > 0:
         raise ValueError(
             "start and after are mutually exclusive pagination modes; "
             "pass a numeric offset OR a keyset cursor, not both"
         )
-    if after is not None:
-        hits = bm25_search(spark, index, terms, k=k, after=after)
-    elif start > 0:
-        from ..operators.topk import paginate
-
-        pool = bm25_search(spark, index, terms, k=start + k)
-        hits = paginate(
-            pool, [F.col("score").desc(), F.col("doc_id")], start, k
-        )
-    else:
-        hits = bm25_search(spark, index, terms, k=k)
-    out = hits.join(docs, "doc_id")  # hits is tiny: Catalyst broadcasts it
+    ranked = bm25_search(spark, index, terms, k=start + k, after=after)
+    hits = [(r["doc_id"], r["score"]) for r in ranked.collect()][start:]
+    score = F.lit(None)
+    if hits:
+        id_type = docs.schema["doc_id"].dataType
+        score = F.create_map(
+            *[x for d, s in hits for x in (F.lit(d).cast(id_type), F.lit(s))]
+        )[F.col("doc_id")]
+    out = docs.filter(F.col("doc_id").isin([d for d, _ in hits])).select(
+        "doc_id",
+        score.cast("double").alias("score"),
+        *[c for c in docs.columns if c != "doc_id"],
+    )
     if users is not None and doc_user_key is not None:
         dcol, ucol = doc_user_key
         out = out.join(F.broadcast(users), out[dcol] == users[ucol], "left")
-    return out.orderBy(F.col("score").desc(), F.col("doc_id"))
+    return out.coalesce(1).sortWithinPartitions(
+        F.col("score").desc(), F.col("doc_id")
+    )
 
 
 def search_hashtag(

@@ -13,15 +13,21 @@ identically in the DuckDB oracle (generated from the same Python constants via
 repr), the fold over query terms is a sum of <= a handful of doubles, and ties
 break on doc_id — so scores hash-match exactly at ROUND(...,4).
 
-Scale: query terms and term_stats-for-the-query are tiny -> broadcast; the only
-shuffle is the per-doc score aggregation, keyed by doc_id. With the bucketed
-postings table (index.write_index) the postings lookup prunes to the query
-terms' buckets — the Spark analog of reading a few posting lists.
+Scale: this is phase 1 of a served keyword request, Solr's query phase (rank
+first, then fetch stored fields — ``search.api.search_keyword``). One pass
+over the query terms' posting lists does everything: each term's df is a
+``count(*) over (partition by token)`` window on the same pruned scan, and
+the corpus constants (n_docs, avg_dl) enter the plan as literals, resolved
+once per SearchIndex (``SearchIndex.corpus_constants``). So the plan has no
+join: no df join-back, no corpus cross join. The only shuffles are the
+window's token partitioning and the per-doc score aggregation. With the
+bucketed postings table (index.write_index) the postings lookup prunes to
+the query terms' buckets — the Spark analog of reading a few posting lists.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .index import SearchIndex
@@ -66,40 +72,35 @@ def bm25_search(
     The displayed score stays the plain ``round(raw, 4)`` double
     (oracle/envelope parity unchanged)."""
     uniq = list(dict.fromkeys(terms))
-    # df for just the query terms, computed from postings pruned to those
-    # tokens — NOT from term_stats, which would aggregate the full token space
-    # (a shuffle over every distinct term in the corpus) to answer a 2-term
-    # query. On the bucketed on-disk postings (write_index) the isin filter
-    # prunes to the query terms' buckets, the Spark analog of reading a few
-    # posting lists.
+    n_docs, avg_dl = index.corpus_constants()
+    # postings pruned to the query tokens — on the bucketed on-disk postings
+    # (write_index) the isin filter prunes to the query terms' buckets, the
+    # Spark analog of reading a few posting lists. df is a window count over
+    # that same scan, NOT term_stats (which would aggregate the full token
+    # space) and not a second read of the posting lists joined back (which
+    # on a served index would repeat the segment union and tombstone join).
     q_postings = index.postings.filter(F.col("token").isin(uniq))
-    q_stats = q_postings.groupBy("token").agg(F.count("*").alias("df"))
-    stats = index.corpus_stats()  # 1 row
 
     # doc_len: denormalized into the postings at build time (Lucene-norms
     # analog) — the query touches ONLY its pruned posting lists, never the
     # corpus-sized doc_stats table. Fallback join kept for indexes written
     # before the doc_len column existed.
-    if "doc_len" in index.postings.columns:
-        with_len = q_postings
-    else:
-        with_len = q_postings.join(index.doc_stats, "doc_id")
+    if "doc_len" not in index.postings.columns:
+        q_postings = q_postings.join(index.doc_stats, "doc_id")
 
-    scored = (
-        with_len.join(F.broadcast(q_stats), "token")
-        .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "partial",
-            bm25_score_terms(
-                F.col("tf"),
-                F.col("df"),
-                F.col("n_docs"),
-                F.col("doc_len").cast("double"),
-                F.col("avg_dl"),
-                k1=k1,
-                b=b,
-            ),
-        )
+    scored = q_postings.withColumn(
+        "df", F.count("*").over(Window.partitionBy("token"))
+    ).withColumn(
+        "partial",
+        bm25_score_terms(
+            F.col("tf"),
+            F.col("df"),
+            F.lit(n_docs).cast("long"),
+            F.col("doc_len").cast("double"),
+            F.lit(avg_dl).cast("double"),
+            k1=k1,
+            b=b,
+        ),
     )
     per_doc = scored.groupBy("doc_id").agg(F.sum("partial").alias("raw_score"))
     ranked = per_doc.select(
@@ -132,8 +133,6 @@ def tfidf_keywords(
     ln(n_docs / df), score = tf * idf; top-k per doc via a doc-partitioned
     window over postings (bounded by per-doc vocabulary, never a global
     sort), then ordered collect. Deterministic: ties break on the term."""
-    from pyspark.sql import Window
-
     from .index import build_index
 
     idx = build_index(docs, id_col=id_col, text_col=text_col, cache=True)

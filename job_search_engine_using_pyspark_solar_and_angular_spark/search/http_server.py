@@ -2,7 +2,7 @@
 (``Ranking Model/src/main/java/api/Handler.java:19-161``: ``@RestController``
 at ``/api/search`` with ``@CrossOrigin("*")`` and three ``@GetMapping``
 routes ``/query`` ``/hashtag`` ``/user``) re-expressed as a stdlib
-``ThreadingHTTPServer`` in front of the single-plan query functions in
+``ThreadingHTTPServer`` in front of the query functions in
 :mod:`.api`. The Angular client contract
 (``Web UI/twitter-Engine/src/app/shared/crud.service.ts:14,30-35`` — plain
 ``GET {endpoint}{path}`` expecting a JSON body) is served byte-for-byte: the
@@ -11,11 +11,15 @@ same envelope field names (``constants/APIConstants.java:5-17``), the same
 always-HTTP-200-with-in-band-``status_code`` error convention
 (``Handler.java:66-72`` returns the error JSON as the 200 body).
 
-What changes under the hood is the engine: each request is ONE Catalyst
-plan (posting-list reads + a broadcast join back to the doc/user rows —
-``search.api.search_keyword``) instead of the reference's Solr query plus
+What changes under the hood is the engine. A keyword request runs the way
+Solr answers it, score then fetch (``search.api.search_keyword``): the
+query phase ranks with BM25 over the query terms' posting lists and
+collects the ≤start+k (doc_id, score) hits; the fetch phase reads those
+docs by id (a literal filter the parquet scan pushes down) and
+broadcast-joins their users. That replaces the reference's Solr query plus
 an N+1 per-row user lookup loop (``Main/SolrRanker.java:80-84,107-110``).
-Only the ≤k result rows ever cross the driver boundary.
+The other routes are one Catalyst plan each. Only the ≤k hits and result
+rows ever cross the driver boundary.
 
 Concurrency: Spark supports concurrent actions from multiple driver
 threads (each HTTP handler thread submits independent jobs scheduled by
@@ -28,7 +32,9 @@ session over the bucketed on-disk index (``search.index.read_index`` /
 from __future__ import annotations
 
 import json
+import logging
 import threading
+from collections import Counter
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 from urllib.parse import parse_qs, urlparse
@@ -60,6 +66,8 @@ HTTP_SUCCESS = 200
 HTTP_ERROR = 500
 SUCCESS_MESSAGE = "Success"
 ERROR_MESSAGE = "Internal Server Error"
+
+_log = logging.getLogger(__name__)
 
 
 def _rows(df: DataFrame) -> list[dict[str, Any]]:
@@ -149,6 +157,9 @@ class SearchService:
         # same `cur` and the last writer silently discard the other's
         # update (lost-update race; the swap itself was always atomic)
         self._refresh_lock = threading.Lock()
+        # failed requests per route (the in-band 500s), for operators
+        self._errors: Counter[str] = Counter()
+        self._errors_lock = threading.Lock()
         self.doc_user_key = doc_user_key
         self.user_name_col = user_name_col
         self.doc_time_col = doc_time_col
@@ -197,6 +208,15 @@ class SearchService:
                 cur.docs if docs is None else docs,
                 cur.users if users is None else users,
             )
+
+    def record_error(self, route: str) -> None:
+        with self._errors_lock:
+            self._errors[route] += 1
+
+    def error_counts(self) -> dict[str, int]:
+        """Failed requests so far, by route."""
+        with self._errors_lock:
+            return dict(self._errors)
 
     # -- the three reference routes ------------------------------------
     def query(
@@ -345,7 +365,9 @@ class _Handler(BaseHTTPRequestHandler):
     """Routes ``GET /api/search/*`` to the bound :class:`SearchService`.
     Always responds HTTP 200 with the in-band ``status_code`` — the exact
     convention the reference controller (and therefore the Angular client's
-    error handling) relies on; only an unknown route gets a real 404."""
+    error handling) relies on; only an unknown route gets a real 404. A
+    failed request is logged with its traceback and counted per route
+    (:meth:`SearchService.error_counts`)."""
 
     service: SearchService  # set by make_server on the subclass
 
@@ -404,6 +426,10 @@ class _Handler(BaseHTTPRequestHandler):
                 self._write(404, {STATUS_CODE: 404, MESSAGE: "Not Found"})
                 return
         except Exception:
+            # the client still gets only the reference's opaque envelope;
+            # the traceback and the count stay on the server side
+            _log.exception("GET %s failed", self.path)
+            self.service.record_error(route)
             body = _err()
         self._write(200, body)
 

@@ -20,7 +20,8 @@ Scale design:
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import threading
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,15 +37,36 @@ class SearchIndex:
     # precomputed 1-row (n_docs, avg_dl), set by read_index: a served query
     # must not re-aggregate the corpus-sized doc_stats table per request.
     corpus: DataFrame | None = None
+    # the same two constants as Python values, set once by
+    # corpus_constants() and never changed afterwards
+    constants: tuple[int, float | None] | None = field(default=None, init=False)
+    _lock: threading.Lock = field(
+        default_factory=threading.Lock, init=False, repr=False, compare=False
+    )
 
     def corpus_stats(self) -> DataFrame:
-        """1-row DataFrame (n_docs, avg_dl) — kept in-plan, never collected."""
+        """1-row DataFrame (n_docs, avg_dl); ``corpus_constants`` collects it
+        once per instance."""
         if self.corpus is not None:
             return self.corpus
         return self.doc_stats.agg(
             F.count("*").alias("n_docs"),
             F.avg(F.col("doc_len").cast("double")).alias("avg_dl"),
         )
+
+    def corpus_constants(self) -> tuple[int, float | None]:
+        """``(n_docs, avg_dl)`` resolved to Python values once per instance
+        (under a lock, so racing first queries collect once), so BM25 plans
+        carry them as literals instead of cross-joining ``corpus_stats()``.
+        The postings and the constants live on the same immutable instance:
+        a query that holds this index can never pair them across
+        generations."""
+        if self.constants is None:
+            with self._lock:
+                if self.constants is None:
+                    row = self.corpus_stats().first()
+                    self.constants = (int(row["n_docs"]), row["avg_dl"])
+        return self.constants
 
 
 def build_index(

@@ -467,7 +467,9 @@ def read_served_index(
     so a term lookup still prunes to the query terms' buckets per segment),
     tombstone-filtered. Corpus constants derive from the per-segment scalar
     PARTIALS — an agg over <= n_segments rows, never a corpus re-aggregation
-    — with bit-identical results (integer sums; one double division).
+    — with bit-identical results (integer sums; one double division), and
+    are collected once here, so every request of this generation carries
+    them as plan literals (``SearchIndex.corpus_constants``).
     term_stats derives lazily from alive postings (BM25 never touches it —
     per-term df comes from the pruned posting lists).
 
@@ -505,12 +507,16 @@ def read_served_index(
         )
     )
     term_stats = alive.groupBy("token").agg(F.count("*").alias("df"))
-    return SearchIndex(
+    idx = SearchIndex(
         postings=alive,
         doc_stats=doc_stats,
         term_stats=term_stats,
         corpus=corpus,
     )
+    # resolved here, beside the manifest collect: a served generation
+    # computes its constants exactly once, and every request reuses them
+    idx.corpus_constants()
+    return idx
 
 
 def _python_probe_buckets(

@@ -6,6 +6,7 @@ in-band error convention, CORS header, concurrent GETs."""
 
 from __future__ import annotations
 
+import itertools
 import json
 import urllib.request
 from concurrent.futures import ThreadPoolExecutor
@@ -125,6 +126,22 @@ def test_error_is_in_band(server):
     assert body["message"] == "Internal Server Error"
 
 
+def test_error_is_logged_and_counted(server, service, caplog):
+    """ROADMAP item 3: the in-band 500 still leaks nothing to the client,
+    but the failure is no longer swallowed — the server logs its traceback
+    and counts it per route."""
+    import logging
+
+    before = service.error_counts().get("vector", 0)
+    with caplog.at_level(logging.ERROR):
+        _, _, body = _get(server.url + "/api/search/vector?vec=0.1,0.2")
+    assert body == {"status_code": 500, "message": "Internal Server Error"}
+    assert service.error_counts()["vector"] == before + 1
+    failed = [r for r in caplog.records if "/api/search/vector" in r.getMessage()]
+    assert failed and failed[0].exc_info is not None
+    assert "vector route not configured" in caplog.text
+
+
 def test_extension_routes(server):
     status, _, body = _get(server.url + "/api/search/autocomplete?prefix=sp")
     assert status == 200 and body["status_code"] == 200
@@ -183,26 +200,42 @@ def test_concurrent_requests(server):
 def test_queries_race_refresh_swaps(spark):
     """refresh()'s atomic-swap claim under load, with a TORN-SNAPSHOT
     detector: two full generations (index+docs) are built over DISJOINT
-    doc_id spaces, both containing the probe term. search_keyword joins
-    hits back to docs on doc_id (inner), so a request that paired
-    generation A's index with generation B's docs would return count 0 —
-    only a coherent snapshot returns hits. A swapper thread flips whole
-    generations while requests hammer the query route; every response
-    must be an in-band 200 with count > 0."""
+    doc_id spaces, both containing the probe term. search_keyword fetches
+    the hits' docs by doc_id, so a request that paired generation A's
+    index with generation B's docs would return count 0 — only a coherent
+    snapshot returns hits. The generations also differ in their corpus
+    constants (n_docs, avg_dl), which each index resolves lazily, under a
+    lock, on its first query — here, while the swaps race. A request that
+    scored one generation's postings with the other's constants would
+    return that generation's ids with scores matching neither. A swapper
+    thread flips whole generations while requests hammer the query route;
+    every response must be an in-band 200 equal to one generation's
+    answer."""
     import threading
 
-    def _gen(base_id):
-        docs = spark.createDataFrame(
-            [
-                (base_id + 1, "quorum consensus replicates the commit log"),
-                (base_id + 2, "quorum reads trade latency for freshness"),
-            ],
-            "doc_id long, text string",
-        )
-        return build_index(docs, cache=True), docs
+    def _docs(base_id, extra):
+        rows = [
+            (base_id + 1, "quorum consensus replicates the commit log"),
+            (base_id + 2, "quorum reads trade latency for freshness"),
+        ] + [(base_id + 3 + i, t) for i, t in enumerate(extra)]
+        return spark.createDataFrame(rows, "doc_id long, text string")
 
-    gen_a = _gen(0)
-    gen_b = _gen(1000)
+    docs_a = _docs(0, [])
+    docs_b = _docs(1000, ["leases expire so a partitioned leader steps down early"])
+
+    def _answer(docs):
+        # from an index of its own, so the served indexes stay unresolved
+        body = SearchService(spark, build_index(docs, cache=True), docs, k=5).query(
+            "quorum"
+        )
+        return [(h["tweet"]["doc_id"], h["tweet"]["score"]) for h in body["data"]]
+
+    want = {"a": _answer(docs_a), "b": _answer(docs_b)}
+    assert [s for _, s in want["a"]] != [s for _, s in want["b"]]
+
+    gen_a = (build_index(docs_a, cache=True), docs_a)
+    gen_b = (build_index(docs_b, cache=True), docs_b)
+    assert gen_a[0].constants is None and gen_b[0].constants is None
     svc = SearchService(spark, gen_a[0], gen_a[1], k=5)
 
     stop = threading.Event()
@@ -225,11 +258,19 @@ def test_queries_race_refresh_swaps(spark):
         stop.set()
         t.join(timeout=10)
     assert swaps["n"] > 0
+    served = set()
     for status, _, body in results:
         assert status == 200 and body["status_code"] == 200 and body["count"] > 0
-        ids = {h["tweet"]["doc_id"] for h in body["data"]}
-        # all hits from ONE generation — never a torn mix
-        assert ids <= {1, 2} or ids <= {1001, 1002}
+        got = [(h["tweet"]["doc_id"], h["tweet"]["score"]) for h in body["data"]]
+        # all hits from ONE generation, scored with that generation's
+        # constants — never a torn mix
+        assert got in (want["a"], want["b"]), got
+        served.add("a" if got == want["a"] else "b")
+    # each served index resolved its own constants, once, and keeps them
+    for name, (idx, docs) in (("a", gen_a), ("b", gen_b)):
+        if name in served:
+            assert idx.constants[0] == docs.count()
+            assert idx.corpus_constants() is idx.constants
 
 
 def test_query_route_pagination(server):
@@ -383,3 +424,144 @@ def test_vector_route(spark, tmp_path):
     sims = [h["sim"] for h in body["data"]]
     assert sims == sorted(sims, reverse=True)
     assert body["data"][0]["sim"] >= 0.99  # the query vector finds itself
+
+
+def _served_answer(spark, live, users, query, start=0, rows=None, after=None):
+    """The keyword envelope built the long way: a fresh build_index over the
+    live docs, BM25, then one join back to the docs and the users,
+    ordered by (score desc, doc_id) — what SearchService.query must
+    return from the serve-loop segments."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search.api import (
+        tokenize_query,
+    )
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search.bm25 import (
+        bm25_search,
+    )
+
+    k = rows if rows is not None else 10
+    idx = build_index(live.select("doc_id", "text"), cache=True)
+    try:
+        hits = bm25_search(spark, idx, tokenize_query(query), k=start + k, after=after)
+        got = (
+            hits.join(live, "doc_id")
+            .join(users, F.col("owner") == F.col("uid"), "left")
+            .orderBy(F.col("score").desc(), F.col("doc_id"))
+            .collect()
+        )[start:]
+    finally:
+        idx.postings.unpersist()
+        idx.doc_stats.unpersist()
+    data = []
+    for r in got:
+        d = r.asDict()
+        user = {"uid": d["uid"], "uname": d["uname"]}
+        data.append({
+            "tweet": {c: d[c] for c in ("doc_id", "score", "text", "owner")},
+            "user": user if d["uid"] is not None else None,
+        })
+    out = {"count": len(data), "data": data}
+    if (start > 0 or rows is not None or after is not None) and data:
+        last = data[-1]["tweet"]
+        out["next_after"] = {"score": last["score"], "doc_id": last["doc_id"]}
+    out.update({"status_code": 200, "message": "Success"})
+    return out
+
+
+def test_served_keyword_scores_then_fetches(spark, tmp_path):
+    """A served keyword request is score-then-fetch: BM25 over the posting
+    lists with the generation's corpus constants as literals, then the
+    top hits' docs read by id. Pinned here: at most 4 Spark jobs per
+    request on one segment and 6 on two with tombstones, and envelopes
+    equal to BM25 over a fresh index of the live docs joined back to docs
+    and users — across offset and keyset paging, a term absent from one
+    segment, a re-indexed doc, no match, empty query."""
+    from job_search_engine_using_pyspark_solar_and_angular_spark.search import (
+        serve_loop,
+    )
+
+    seg1 = [
+        (1, "spark shuffles partition data across executors for wide joins"),
+        (2, "parquet stores columns together enabling predicate pushdown in spark"),
+        (3, "broadcast joins ship the small table to every spark executor"),
+        (4, "watermarks bound streaming state by evicting old windows"),
+        (5, "spark caches hot partitions in executor memory between stages"),
+        (6, "minhash signatures approximate jaccard similarity of documents"),
+    ]
+    seg2 = [
+        # doc 1 re-indexed: its seg-1 postings are tombstoned
+        (1, "kubernetes schedules spark executors onto cluster nodes"),
+        # "kafka" is absent from segment 1
+        (7, "kafka topics feed spark structured streaming queries"),
+    ]
+    base = str(tmp_path / "serving")
+    prefix = "kw_jobs_" + tmp_path.name.replace("-", "_").lower()
+
+    def _df(rows):
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def _live(rows):
+        # docs and users are parquet, as a deployment serves them, so the
+        # by-id fetch runs against a real file scan
+        path = str(tmp_path / f"docs{len(rows)}")
+        _df(rows).withColumn("owner", F.col("doc_id") % 3).write.parquet(path)
+        return spark.read.parquet(path)
+
+    upath = str(tmp_path / "users")
+    spark.createDataFrame(
+        [(0, "ada"), (1, "grace")], "uid long, uname string"
+    ).write.parquet(upath)
+    users = spark.read.parquet(upath)
+    sc = spark.sparkContext
+
+    groups = itertools.count()
+
+    def _jobs(svc, *args, **kw):
+        group = f"kw-jobs-{next(groups)}"
+        sc.setJobGroup(group, "served keyword request")
+        try:
+            body = svc.query(*args, **kw)
+        finally:
+            sc.setJobGroup("default", "")
+        return body, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    serve_loop.serve_batch(spark, _df(seg1), base, prefix, postings_buckets=4)
+    docs1 = _live(seg1)
+    svc = SearchService(
+        spark, serve_loop.read_served_index(spark, base), docs1, users=users,
+        doc_user_key=("owner", "uid"), k=10,
+    )
+    body, n = _jobs(svc, "spark executors")
+    assert n <= 4, f"one-segment keyword request ran {n} jobs"
+    assert body == _served_answer(spark, docs1, users, "spark executors")
+    assert body["count"] > 3
+
+    serve_loop.serve_batch(spark, _df(seg2), base, prefix, postings_buckets=4)
+    live = seg2 + [r for r in seg1 if r[0] != 1]
+    docs2 = _live(live)
+    svc.refresh(index=serve_loop.read_served_index(spark, base), docs=docs2)
+
+    page1, n = _jobs(svc, "spark executors", rows=2)
+    assert n <= 6, f"two-segment keyword request ran {n} jobs"
+    assert page1 == _served_answer(spark, docs2, users, "spark executors", rows=2)
+    cursor = (page1["next_after"]["score"], page1["next_after"]["doc_id"])
+    cases = [
+        ("spark executors", {}),
+        ("spark executors", {"start": 2, "rows": 2}),
+        ("spark executors", {"after": cursor, "rows": 2}),
+        ("kafka spark", {}),  # kafka: segment 2 only
+        ("shuffles kubernetes", {}),  # doc 1's old and new text
+        ("zeppelin", {}),  # no match
+        ("", {}),  # empty query
+    ]
+    served = {}
+    for query, kw in cases:
+        body, n = _jobs(svc, query, **kw)
+        assert n <= 6, f"{query!r} {kw}: {n} jobs"
+        assert body == _served_answer(spark, docs2, users, query, **kw), (query, kw)
+        served[query] = body["data"]
+    # the re-indexed doc serves its new text only
+    hit = served["shuffles kubernetes"]
+    assert [h["tweet"]["doc_id"] for h in hit] == [1]
+    assert "kubernetes" in hit[0]["tweet"]["text"]
+    assert served["kafka spark"][0]["tweet"]["doc_id"] == 7
+    assert served["zeppelin"] == served[""] == []

@@ -122,10 +122,14 @@ def test_partition_pruning_on_partitioned_output(spark, tmp_path):
 
 
 def test_bm25_broadcasts_small_sides(spark):
-    """R1: query-term stats and corpus stats broadcast; only per-doc agg
-    shuffles."""
+    """R1: BM25 scores in one pass over the pruned posting lists. Per-term
+    df is a window over that scan and the corpus constants are plan
+    literals, so nothing is broadcast or joined back: no join of any kind,
+    one Window, top-k via TakeOrderedAndProject."""
     p = plan_of(spark, "q20_bm25_search")
-    assert "BroadcastHashJoin" in p
+    assert "Join" not in p
+    assert "BroadcastNestedLoopJoin" not in p
+    assert p.count("Window [") == 1, p
     assert "TakeOrderedAndProject" in p
 
 
